@@ -32,6 +32,7 @@ import json
 import math
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -151,7 +152,7 @@ class IndexTables:
         self._df_cache = {}
         self._cs_cache = None
         self._vocab_map_state = None
-        self._view_names = None  # re-register views over the fresh caches
+        self._view_prefix = None  # new views over the fresh caches
 
     def doc_ids(self, spark):  # (docid long, url string)
         return self._cached(spark, "doc_ids")
@@ -169,20 +170,29 @@ class IndexTables:
         return self._cached(spark, "pagerank")
 
     def table_view(self, spark, name: str) -> str:
-        """Temp-view name over a cached table (registered once per handle).
+        """Qualified name of a global temp view over a cached table.
         Lets the single-statement SQL query paths reference the SAME cached
         DataFrames the Column-API paths scan — one `spark.sql` round-trip
         instead of ~260 Py4J calls of incremental plan building (the
-        driver-side half of the single-query latency floor)."""
-        views = getattr(self, "_view_names", None)
-        if views is None:
-            views = {}
-            self._view_names = views
-        if name not in views:
-            vname = f"__themis_{name}_{abs(id(self))}"
-            self._cached(spark, name).createOrReplaceTempView(vname)
-            views[name] = vname
-        return views[name]
+        driver-side half of the single-query latency floor).
+
+        Global, not session, temp views: the cache belongs to the
+        application, and every session of it (``spark.newSession()``
+        included) must resolve the view. Names are unique per handle and per
+        :meth:`refresh`, so an existing view is a current one; existence is
+        asked of the live catalog, not remembered (a restarted application
+        starts without them)."""
+        prefix = getattr(self, "_view_prefix", None)
+        if prefix is None:
+            db = spark.conf.get("spark.sql.globalTempDatabase")
+            prefix = f"{db}.__themis_{uuid.uuid4().hex[:12]}_"
+            self._view_prefix = prefix
+        qualified = prefix + name
+        if not spark.catalog.tableExists(qualified):
+            self._cached(spark, name).createOrReplaceGlobalTempView(
+                qualified.split(".", 1)[1]
+            )
+        return qualified
 
     def postings_view(self, spark) -> str:
         return self.table_view(spark, "postings")

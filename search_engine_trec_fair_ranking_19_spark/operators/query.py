@@ -55,6 +55,8 @@ def _decode_udf():
     if _decode_udf_cached is None:
 
         def decode(gaps: pd.Series, tfs: pd.Series, dls: pd.Series) -> pd.DataFrame:
+            if len(gaps) == 0:  # np.split(empty, []) would yield one row
+                return pd.DataFrame({"docids": [], "tfs": [], "dls": []})
             # whole-batch decode: concat every block's buffer per stream and
             # run ONE vectorized varint+delta pass (decode_blocks_concat) —
             # no per-block Python beyond the C-speed join/len loop.
@@ -85,20 +87,17 @@ def _decode_udf():
 
 
 _SQL_DECODE_NAME = "__themis_decode_blocks"
-_sql_decode_sessions: set[str] = set()
 
 
 def _ensure_sql_decode(spark: SparkSession) -> None:
-    """Register the block-decode pandas UDF for SQL use (once per session).
+    """Register the block-decode pandas UDF for SQL use in ``spark``.
 
-    Keyed by applicationId, NOT id(spark): the scaling tools create and
-    stop a session per bench arm, and CPython can reuse a freed object's
-    id — a stale hit would skip registration and break the SQL path with
-    an undefined-function error."""
-    key = spark.sparkContext.applicationId
-    if key not in _sql_decode_sessions:
+    Asks the live session's catalog rather than remembering past
+    registrations: temporary functions belong to one session, and
+    ``spark.newSession()`` shares the applicationId but not the function
+    registry."""
+    if not spark.catalog.functionExists(_SQL_DECODE_NAME):
         spark.udf.register(_SQL_DECODE_NAME, _decode_udf())
-        _sql_decode_sessions.add(key)
 
 
 # terms eligible for inlining into a SQL string literal: anything except

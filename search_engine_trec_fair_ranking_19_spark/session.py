@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import sysconfig
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -32,9 +33,9 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 
 
 # SQL literal type per atomic field type eligible for the LocalRelation
-# fast path (strings excluded: escaping under configurable parser modes is
-# where correctness bugs live — they take the parallelize fallback)
+# fast path
 _VALUES_SQL_TYPE = {
+    "StringType": "STRING",
     "LongType": "BIGINT",
     "IntegerType": "INT",
     "ShortType": "SMALLINT",
@@ -50,6 +51,11 @@ def _values_cell(v, sql_t: str) -> str:
         return f"CAST(NULL AS {sql_t})"
     if sql_t == "BOOLEAN":
         return "TRUE" if v else "FALSE"
+    if sql_t == "STRING":
+        # hex of the UTF-8 bytes: no quote or escape for any parser mode to
+        # read differently. Binding cells as named parameters instead costs
+        # ~2 Py4J calls per cell (measured 0.6-1.8 s for 2,000 cells)
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
     if sql_t in ("DOUBLE", "FLOAT"):
         f = float(v)
         if f != f or f in (float("inf"), float("-inf")):
@@ -65,14 +71,14 @@ def _values_cell(v, sql_t: str) -> str:
 def local_rows_df(spark: SparkSession, rows, schema):
     """Driver-built small DataFrame (≤ a few thousand rows), cheapest shape.
 
-    Fast path (all-numeric/boolean schemas, ≤2000 rows): a SQL ``VALUES``
+    Fast path (numeric/boolean/string schemas, ≤2000 rows): a SQL ``VALUES``
     LocalRelation. Collecting one is an ``executeCollect`` on
     LocalTableScan — ZERO Spark jobs, no pickle→JVM round-trip. Measured:
     build+collect of a 10-row top-k frame is ~30 ms vs ~220 ms (and one
     whole job) for the parallelize shape — that job used to be 1 of the 3
     jobs of every single bm25 query.
 
-    Fallback (strings/arrays/larger data): ``parallelize(rows, 1)``.
+    Fallback (arrays/maps/larger data): ``parallelize(rows, 1)``.
     ``spark.createDataFrame(list)`` would split into defaultParallelism
     slices, so every downstream action over a 20-row frame schedules
     ~n_cores near-empty tasks, and a 1-row table write emits ~n_cores files
@@ -125,6 +131,26 @@ def _default_master(cpus: str) -> str:
     return f"local[{cpus}]"
 
 
+def _worker_daemon_conf(master: str) -> dict[str, str]:
+    """Start Python workers through this package's daemon (``pyworker.py``,
+    which stops each task from re-reading pyspark.zip) where they can import it.
+
+    Only in-process local masters (``local``, ``local[N]``): their workers
+    inherit the driver's working directory and PYTHONPATH, so the package
+    imports at daemon start whenever one of those (or site-packages) holds
+    it. Cluster executors that receive the package with --py-files see it
+    only inside a task, after the daemon has started, so they keep the
+    stock ``pyspark.daemon``."""
+    if not (master == "local" or master.startswith("local[")):
+        return {}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = [os.getcwd(), sysconfig.get_paths()["purelib"]]
+    dirs += os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if root not in {os.path.abspath(d) for d in dirs if d}:
+        return {}
+    return {"spark.python.daemon.module": f"{__package__}.pyworker"}
+
+
 def get_spark(
     app_name: str = "themis-spark",
     master: str | None = None,
@@ -137,6 +163,7 @@ def get_spark(
     cluster, call with ``master=None`` and let spark-submit own the master.
     AQE (incl. skew-join handling) and Arrow are always on — the engine's hot
     paths are Arrow-batched pandas UDFs and skew-prone term aggregations.
+    ``extra_conf`` is applied last, so it overrides any of these settings.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -181,6 +208,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_daemon_conf(master), **(extra_conf or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -206,6 +206,30 @@ def test_wand_threshold_routes_small_queries_to_exhaustive(spark, tables, oracle
     assert "fallback" not in stats and "theta" in stats
 
 
+def test_decode_udf_empty_batch_returns_no_rows():
+    """A 0-row Arrow batch decodes to 0 rows (np.split(empty, []) is one
+    piece, which used to surface as a phantom posting row)."""
+    import pandas as pd
+
+    empty = pd.Series([], dtype=object)
+    out = q._decode_udf().func(empty, empty, empty)
+    assert len(out) == 0
+    assert list(out.columns) == ["docids", "tfs", "dls"]
+
+
+def test_sql_paths_work_in_a_new_session(spark, tables):
+    """Temp functions and temp views belong to one session; a second session
+    of the same application must still resolve the SQL paths' decode UDF and
+    table views (it used to raise AnalysisException)."""
+    query = "web search engine"
+    want_bm25 = q.bm25_topk(spark, tables, query, k=10).collect()
+    want_vsm = q.vsm_topk(spark, tables, query, k=10).collect()
+    other = spark.newSession()
+    assert q.bm25_topk(other, tables, query, k=10).collect() == want_bm25
+    assert q.vsm_topk(other, tables, query, k=10).collect() == want_vsm
+    assert q.bm25_topk(spark, tables, query, k=10).collect() == want_bm25
+
+
 def test_topk_result_is_driver_local(spark, tables):
     """Perf contract: a bounded top-k result is a driver-built LocalRelation.
     Collecting it must launch ZERO Spark jobs (executeCollect on
