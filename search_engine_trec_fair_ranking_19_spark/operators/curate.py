@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import text_analysis as ta
 from .dedup import connected_components, ngram_jaccard_pairs
@@ -382,15 +383,24 @@ def latest_snapshot(
     one candidate row per url BEFORE the exchange, so a url recrawled
     monthly for a decade ships ~1 row per upstream partition into the
     shuffle, not 120. One shuffle on the url, no joins, all columns ride
-    along untouched (the html binary is moved once, never compared).
+    along untouched (the html binary is moved once and hashed for the
+    tie-break, never compared). xxhash64 rejects map columns, so each one is
+    hashed as its entries in sorted order — the same map always hashes the
+    same, whatever order its entries were built in.
     """
+    hashed = [
+        F.array_sort(F.map_entries(f.name))
+        if isinstance(f.dataType, T.MapType)
+        else F.col(f.name)
+        for f in df.schema.fields
+    ]
     w = Window.partitionBy(key_col).orderBy(
         F.col(ts_col).desc_nulls_last(),
         F.col(tiebreak_col).desc_nulls_last(),
         # full-row hash: removes the last partition-order dependence when
         # (ts, tiebreak) don't distinguish (e.g. identical recrawl text
         # with differing html bytes).  xxhash64 covers binary columns.
-        F.xxhash64(*df.columns).desc(),
+        F.xxhash64(*hashed).desc(),
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))

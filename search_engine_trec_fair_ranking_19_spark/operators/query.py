@@ -1,12 +1,13 @@
 """Query-time retrieval — the Spark rebuild of `Search.search()` →
 `Retrieval.getRankedResults()` (SURVEY.md §3.2).
 
-Plan shape per query (all stock DataFrame ops + one Arrow decode UDF):
+Plan shape per query (one SQL statement + one Arrow decode UDF):
 
-  tiny query-term DF (driver)  --broadcast-->  join postings blocks on term
-      (parquet row-group pruning via the term-sorted layout + pushed IN filter)
+  postings blocks of the query terms (pushed IN filter; hex-literal terms)
   → decode blocks (vectorized pandas UDF) → explode (JVM)
-  → per-(term,doc) score expression (whole-stage codegen)
+  → per-(term,doc) score expression (whole-stage codegen): each model's
+      formula is written once, as SQL text (`_bm25_contrib`, `_vsm_contrib`),
+      and every single-query, batch and WAND plan renders it
   → groupBy(docid).agg(sum)  [sparse hash agg — replaces the reference's dense
       double[N] arrays, `OkapiBM25P.java:28-29,40-43`, impossible at 10^12 docs]
   → max-normalize → optional PageRank blend (`Retrieval.sort:71-116`)
@@ -22,7 +23,6 @@ unmatched terms, exactly matching the reference's math.
 from __future__ import annotations
 
 import math
-import re
 from dataclasses import dataclass
 
 import numpy as np
@@ -35,6 +35,7 @@ from ..analysis.expansion import expand_query
 from ..config import EngineConfig
 from ..functions.codec import decode_blocks_concat
 from ..oracle.engine import merge_terms
+from ..session import _values_cell
 from ..session import local_rows_df as _local_df
 from .index_build import IndexTables
 
@@ -100,72 +101,84 @@ def _ensure_sql_decode(spark: SparkSession) -> None:
         spark.udf.register(_SQL_DECODE_NAME, _decode_udf())
 
 
-# terms eligible for inlining into a SQL string literal: anything except
-# quote/backslash/control chars (the parser's escape machinery). Query
-# tokenization splits on both quote chars, so real queries always qualify;
-# anything exotic just takes the Column-API path.
-_SQL_SAFE_TERM = re.compile(r"[^'\"\\\x00-\x1f]+\Z")
+def _dbl(v: float) -> str:
+    """Bit-exact SQL double literal."""
+    return _values_cell(v, "DOUBLE")
 
 
-def _sql_double(v: float) -> str:
-    """Bit-exact double literal (repr → correctly-rounded decimal cast)."""
-    f = float(v)
-    if f != f or f in (float("inf"), float("-inf")):
-        name = "NaN" if f != f else ("Infinity" if f > 0 else "-Infinity")
-        return f"CAST('{name}' AS DOUBLE)"
-    return f"CAST({f!r} AS DOUBLE)"
+def _bm25_contrib(
+    tf: str, dl: str, weight: str, idf: str, config: EngineConfig, avgdl: float
+) -> str:
+    """SQL expression text of one posting's BM25+ contribution
+    (`OkapiBM25P.java:67-88`) — the only place the formula is written.
 
-
-def _bm25_topk_sql(
-    spark: SparkSession,
-    tables: IndexTables,
-    pq: PreparedQuery,
-    config: EngineConfig,
-    k: int,
-) -> list | None:
-    """Single-statement SQL twin of matched_postings → _bm25_raw → top-k.
-
-    The Column-API path spends ~0.2 s/query on ~260 Py4J round-trips of
-    incremental plan construction — more than the sf0.1 EXECUTION time of
-    the query. Building the identical logical plan as ONE SQL string is two
-    round-trips (sql + collect). Expression tree mirrors `_bm25_raw`
-    operation-for-operation (same literals via repr, same associativity),
-    so scores are bit-identical — the bm25 gate entries pin that. Returns
-    None when a term can't be safely inlined (→ caller falls back)."""
-    terms = [t for t, _ in pq.terms]
-    if not all(_SQL_SAFE_TERM.match(t) for t in terms):
-        return None
-    _ensure_sql_decode(spark)
-    view = tables.postings_view(spark)
-    in_list = ", ".join(f"'{t}'" for t in terms)
-    wmap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(w)}" for t, w in pq.terms
-    )
-    imap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(i)}" for (t, _), i in zip(pq.terms, pq.idfs)
-    )
+    ``tf``, ``dl``, ``weight`` and ``idf`` are SQL expressions (columns or
+    literal-map lookups). Every plan renders the same literals in the same
+    order and associativity, so single-query, batch and WAND scores are
+    bit-identical."""
     k1, b = config.bm25_k1, config.bm25_b
-    f_expr = f"(tf * {wmap}[term])"
-    b_expr = (
-        f"({_sql_double(k1)} * ({_sql_double(1.0 - b)}"
-        f" + {_sql_double(b)} * dl / {_sql_double(pq.avgdl)}))"
+    f = f"({tf} * {weight})"
+    norm = f"({_dbl(k1)} * ({_dbl(1.0 - b)} + {_dbl(b)} * {dl} / {_dbl(avgdl)}))"
+    return f"{idf} * ({f} * {_dbl(k1 + 1.0)} / ({f} + {norm}))"
+
+
+def _bm25_block_ub(weight: str, idf: str, config: EngineConfig, avgdl: float) -> str:
+    """Upper bound of any posting's contribution in a block: the tf-term is
+    monotone up in tf and down in dl, so the block's ``max_tf``/``min_dl``
+    bound it; idf<0 makes every contribution negative, so 0 is a safe bound."""
+    contrib = _bm25_contrib("max_tf", "min_dl", weight, idf, config, avgdl)
+    return f"greatest({contrib}, {_dbl(0.0)})"
+
+
+def _vsm_contrib(tf: str, max_tf: str, weight: str, idf: str, q_weight: str) -> str:
+    """SQL expression text of one posting's term of the VSM dot product
+    (`VSM.java:33-129`): doc weight (tf·weight/maxTF)·idf times the query
+    weight — the only place it is written."""
+    return f"{q_weight} * (({tf} * {weight} / {max_tf}) * {idf})"
+
+
+def _vsm_cosine(dot: str, vsm_weight: str, q_norm: str) -> str:
+    """Cosine from the dot product, in the oracle's association
+    ``dot / (vsm_weight * q_norm)`` (`oracle/engine.py`)."""
+    return f"{dot} / ({vsm_weight} * {q_norm})"
+
+
+def _vsm_query_weights(pq: PreparedQuery) -> tuple[list[float], float]:
+    """Per-term query weights (w/max_w)·idf and their Euclidean norm."""
+    max_q_freq = max(w for _, w in pq.terms)
+    q_weights = [(w / max_q_freq) * idf for (_, w), idf in zip(pq.terms, pq.idfs)]
+    return q_weights, math.sqrt(sum(w * w for w in q_weights))
+
+
+def _term_lookup(pq: PreparedQuery, values, term: str = "term") -> str:
+    """``map(t1, v1, ...)[term]``: a per-query-term value as a SQL literal-map
+    lookup.
+
+    Query weights/idfs attach to postings as literal map lookups, not a
+    broadcast join: a query has a handful of terms, so the lookup is a short
+    constant-folded chain inside the scoring stage's codegen — no broadcast
+    exchange, no extra Spark job per query (round-2 bench: ~4 jobs per query,
+    one of which was exactly this build-and-broadcast). Terms are hex
+    literals, so any term inlines, quotes and control characters included."""
+    pairs = ", ".join(
+        f"{_values_cell(t, 'STRING')}, {_dbl(v)}"
+        for (t, _), v in zip(pq.terms, values)
     )
-    contrib = f"{imap}[term] * ({f_expr} * {_sql_double(k1 + 1.0)} / ({f_expr} + {b_expr}))"
-    sql = f"""{_posting_cte(view, in_list, with_dl=True)}
-        SELECT docid, sum({contrib}) + {_sql_double(sum(pq.idfs))} AS raw
-        FROM posting GROUP BY docid
-        ORDER BY raw DESC, docid ASC LIMIT {int(k)}
-    """
-    return spark.sql(sql).collect()
+    return f"map({pairs})[{term}]"
 
 
-def _posting_cte(view: str, in_list: str, with_dl: bool) -> str:
-    """Shared decode CTE for the single-statement SQL query paths."""
+def _posting_cte(
+    spark: SparkSession, tables: IndexTables, pq: PreparedQuery, with_dl: bool
+) -> str:
+    """Decode CTE ``posting(term, docid, tf[, dl])`` over the query terms'
+    blocks, for the single-statement SQL query paths."""
+    _ensure_sql_decode(spark)
+    in_list = ", ".join(_values_cell(t, "STRING") for t, _ in pq.terms)
     dl = ", d.d.dls[p.i] AS dl" if with_dl else ""
     return f"""
         WITH dec AS (
           SELECT term, {_SQL_DECODE_NAME}(gaps, tfs, dls) AS d
-          FROM {view} WHERE term IN ({in_list})
+          FROM {tables.postings_view(spark)} WHERE term IN ({in_list})
         ),
         posting AS (
           SELECT term, p.docid AS docid, d.d.tfs[p.i] AS tf{dl}
@@ -173,80 +186,58 @@ def _posting_cte(view: str, in_list: str, with_dl: bool) -> str:
         )"""
 
 
-def _vsm_topk_sql(
-    spark: SparkSession,
-    tables: IndexTables,
-    pq: PreparedQuery,
-    k: int,
-    q_weights: list[float],
-    q_norm: float,
-) -> list | None:
-    """Single-statement SQL twin of vsm_topk's posting ⋈ doc_stats scoring —
-    same rationale and same bit-exactness contract as :func:`_bm25_topk_sql`
-    (expression tree mirrors the Column plan operation-for-operation)."""
-    terms = [t for t, _ in pq.terms]
-    if not all(_SQL_SAFE_TERM.match(t) for t in terms):
-        return None
-    _ensure_sql_decode(spark)
-    pview = tables.postings_view(spark)
-    sview = tables.table_view(spark, "doc_stats")
-    in_list = ", ".join(f"'{t}'" for t in terms)
-    wmap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(w)}" for t, w in pq.terms
-    )
-    imap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(i)}" for (t, _), i in zip(pq.terms, pq.idfs)
-    )
-    qwmap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(qw)}" for (t, _), qw in zip(pq.terms, q_weights)
-    )
-    contrib = (
-        f"{qwmap}[posting.term] * ((posting.tf * {wmap}[posting.term]"
-        f" / s.max_tf) * {imap}[posting.term])"
-    )
-    sql = f"""{_posting_cte(pview, in_list, with_dl=False)}
-        SELECT posting.docid AS docid,
-               sum({contrib}) / (first(s.vsm_weight) * {_sql_double(q_norm)}) AS raw
-        FROM posting JOIN {sview} s ON posting.docid = s.docid
-        GROUP BY posting.docid
-        ORDER BY raw DESC, docid ASC LIMIT {int(k)}
-    """
-    return spark.sql(sql).collect()
-
-
-def _normalized_rows_df(spark: SparkSession, rows: list) -> DataFrame:
-    """(docid, raw) top-k rows → max-normalized TOPK frame, exactly like
-    _finalize's bounded-k branch (reference forces max→1 when ≤ 0,
-    `OkapiBM25P.java:91-94` / `VSM.java:113-116`)."""
-    if not rows:
-        return _local_df(spark, [], TOPK_SCHEMA)
-    max_raw = rows[0]["raw"]
-    if max_raw <= 0.0:
-        max_raw = 1.0
-    return _local_df(
-        spark, [(r["docid"], r["raw"] / max_raw) for r in rows], TOPK_SCHEMA
-    )
-
-
-def _bm25_exhaustive(
-    spark: SparkSession,
-    tables: IndexTables,
-    pq: PreparedQuery,
-    config: EngineConfig,
-    k: int | None,
-    pagerank_weight: float,
+def _bm25_raw_sql(
+    spark: SparkSession, tables: IndexTables, pq: PreparedQuery, config: EngineConfig
 ) -> DataFrame:
-    """Exhaustive BM25+ scoring shared by bm25_topk and the WAND router's
-    fallbacks: SQL single-statement fast path when eligible (bounded k, no
-    blend), else the Column-API plan + _finalize."""
-    if k is not None and pagerank_weight == 0.0:
-        rows = _bm25_topk_sql(spark, tables, pq, config, k)
-        if rows is not None:
-            return _normalized_rows_df(spark, rows)
-    posting = matched_postings(spark, tables, [t for t, _ in pq.terms])
-    return _finalize(
-        spark, tables, _bm25_raw(spark, posting, pq, config), k, pagerank_weight
+    """(docid, raw) BM25+ scores of one query as ONE ``spark.sql`` statement.
+
+    Building the plan Column by Column costs ~260 Py4J round-trips
+    (~0.2 s/query, more than the sf0.1 execution time of the query); one SQL
+    string is one round-trip, and :func:`_finalize` adds the top-k."""
+    contrib = _bm25_contrib(
+        "tf", "dl", _term_lookup(pq, [w for _, w in pq.terms]),
+        _term_lookup(pq, pq.idfs), config, pq.avgdl,
     )
+    return spark.sql(
+        f"""{_posting_cte(spark, tables, pq, with_dl=True)}
+        SELECT docid, sum({contrib}) + {_dbl(sum(pq.idfs))} AS raw
+        FROM posting GROUP BY docid"""
+    )
+
+
+def _vsm_raw_sql(
+    spark: SparkSession, tables: IndexTables, pq: PreparedQuery
+) -> DataFrame:
+    """(docid, raw) VSM scores of one query as ONE ``spark.sql`` statement:
+    posting ⋈ doc_stats for (max_tf, vsm_weight) (J3)."""
+    q_weights, q_norm = _vsm_query_weights(pq)
+    contrib = _vsm_contrib(
+        "posting.tf", "s.max_tf",
+        _term_lookup(pq, [w for _, w in pq.terms], "posting.term"),
+        _term_lookup(pq, pq.idfs, "posting.term"),
+        _term_lookup(pq, q_weights, "posting.term"),
+    )
+    raw = _vsm_cosine(f"sum({contrib})", "first(s.vsm_weight)", _dbl(q_norm))
+    return spark.sql(
+        f"""{_posting_cte(spark, tables, pq, with_dl=False)}
+        SELECT posting.docid AS docid, {raw} AS raw
+        FROM posting JOIN {tables.table_view(spark, "doc_stats")} s
+          ON posting.docid = s.docid
+        GROUP BY posting.docid"""
+    )
+
+
+def _wand_routed(pq: PreparedQuery, k: int, config: EngineConfig) -> bool:
+    """Whether block-max WAND pays for this query (measured,
+    BENCH/wand_crossover.json): BOTH the decode volume clears the crossover
+    (Σ DF ≥ ``wand_min_postings``) AND the query is selective — its rare
+    terms (df ≤ N/divisor) cover ≥ k docs, so θ can rise above common-only
+    blocks' UB. Pure driver arithmetic on pq.dfs; threshold 0 forces WAND."""
+    if config.wand_min_postings == 0:
+        return True
+    rare_df_max = max(1, pq.n_docs // max(config.wand_rare_df_divisor, 1))
+    rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
+    return sum(pq.dfs) >= config.wand_min_postings and rare_cover >= k
 
 
 @dataclass
@@ -327,24 +318,6 @@ def matched_postings(
     return decode_blocks(tables.postings(spark).filter(F.col("term").isin(terms)))
 
 
-def _lit_map(pairs) -> Column:
-    """[(key, value)] → constant map literal column.
-
-    Query weights/idfs are attached to postings as LITERAL map lookups, not a
-    broadcast-DF join: a query has a handful of terms, so the lookup is a
-    short constant-folded chain inside the scoring stage's codegen — no
-    broadcast exchange, no extra Spark job per query (round-2 bench: ~4 jobs
-    per query, one of which was exactly this build-and-broadcast)."""
-    return F.create_map(*[F.lit(x) for kv in pairs for x in kv])
-
-
-def _weight_idf_cols(pq: PreparedQuery) -> tuple[Column, Column]:
-    term = F.col("term")
-    weight = _lit_map(pq.terms)[term]
-    idf = _lit_map(zip((t for t, _ in pq.terms), pq.idfs))[term]
-    return weight, idf
-
-
 def _finalize(
     spark: SparkSession,
     tables: IndexTables,
@@ -372,11 +345,7 @@ def _finalize(
       materialization) so the persisted parents can be released."""
     if pagerank_weight == 0.0:
         if k is not None:
-            rows = (
-                raw_scores.orderBy(F.desc("raw"), F.asc("docid"))
-                .limit(k)
-                .collect()
-            )
+            rows = raw_scores.orderBy(F.desc("raw"), F.asc("docid")).limit(k).collect()
             if not rows:
                 return _local_df(spark, [], TOPK_SCHEMA)
             max_raw = rows[0]["raw"]  # global max: sort desc, row 1 survives
@@ -392,12 +361,9 @@ def _finalize(
             return _local_df(spark, [], TOPK_SCHEMA)
         if max_raw <= 0.0:
             max_raw = 1.0
-        return (
-            raw_scores.select(
-                "docid", (F.col("raw") / F.lit(max_raw)).alias("score")
-            )
-            .orderBy(F.desc("score"), F.asc("docid"))
-        )
+        return raw_scores.select(
+            "docid", (F.col("raw") / F.lit(max_raw)).alias("score")
+        ).orderBy(F.desc("score"), F.asc("docid"))
 
     raw_scores = raw_scores.persist()
     scored = None
@@ -428,12 +394,7 @@ def _finalize(
             .orderBy(F.desc("score"), F.asc("docid"))
         )
         if k is not None:
-            rows = final.limit(k).collect()
-            return (
-                _local_df(spark, rows, TOPK_SCHEMA)
-                if rows
-                else _local_df(spark, [], TOPK_SCHEMA)
-            )
+            return _local_df(spark, final.limit(k).collect(), TOPK_SCHEMA)
         # k=None: distributed materialization, then parents can be released
         return final.localCheckpoint()
     finally:
@@ -479,7 +440,8 @@ def bm25_topk(
     pq = prepare_query(spark, tables, query, config, expander=expander)
     if not pq.terms:
         return _local_df(spark, [], TOPK_SCHEMA)
-    return _bm25_exhaustive(spark, tables, pq, config, k, pagerank_weight)
+    raw = _bm25_raw_sql(spark, tables, pq, config)
+    return _finalize(spark, tables, raw, k, pagerank_weight)
 
 
 def _bm25_raw(
@@ -490,17 +452,12 @@ def _bm25_raw(
     Postings arrive pre-filtered to the query terms (`matched_postings`), so
     weight/idf attach as literal-map lookups — the whole scoring is one
     codegen stage with no join."""
-    k1, b = config.bm25_k1, config.bm25_b
-    weight, idf = _weight_idf_cols(pq)
-    f = F.col("tf") * weight
-    B = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(pq.avgdl)
+    contrib = _bm25_contrib(
+        "tf", "dl", _term_lookup(pq, [w for _, w in pq.terms]),
+        _term_lookup(pq, pq.idfs), config, pq.avgdl,
     )
-    contrib = idf * (f * F.lit(k1 + 1.0) / (f + B))
-    return (
-        posting.withColumn("contrib", contrib)
-        .groupBy("docid")
-        .agg((F.sum("contrib") + F.lit(sum(pq.idfs))).alias("raw"))
+    return posting.groupBy("docid").agg(
+        F.expr(f"sum({contrib}) + {_dbl(sum(pq.idfs))}").alias("raw")
     )
 
 
@@ -535,7 +492,7 @@ def bm25_topk_batch(
         pushed-IN filter covers the batch, so shared head terms decode once);
       * per-query weights/idfs ride a broadcast (qid, term, weight, idf)
         frame — at batch size a real broadcast join beats N literal-map
-        plans, inverting the single-query design choice (`_lit_map`);
+        plans, inverting the single-query design choice (`_term_lookup`);
       * scoring aggregates by (qid, docid) — one shuffle for the batch; the
         per-query additive Σidf constant (`OkapiBM25P.java:40-43` δ-term)
         joins back on qid from a second driver-sized broadcast;
@@ -569,21 +526,11 @@ def bm25_topk_batch(
     if not pqs:
         return _local_df(spark, [], BATCH_TOPK_SCHEMA)
 
-    # per-qid routing — identical arithmetic to the single-query entry
-    # point (see bm25_topk_wand): decode volume must clear the measured
-    # crossover AND the query must be selective enough for θ to rise
     wand_pqs: dict[int, PreparedQuery] = {}
     exh_pqs: dict[int, PreparedQuery] = dict(pqs)
     if k is not None and pagerank_weight == 0.0:
-        forced = config.wand_min_postings == 0
         for qid, pq in pqs.items():
-            rare_df_max = max(
-                1, pq.n_docs // max(config.wand_rare_df_divisor, 1)
-            )
-            rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
-            if forced or (
-                sum(pq.dfs) >= config.wand_min_postings and rare_cover >= k
-            ):
+            if _wand_routed(pq, k, config):
                 wand_pqs[qid] = exh_pqs.pop(qid)
     if stats is not None:
         stats["paths"] = {
@@ -593,7 +540,11 @@ def bm25_topk_batch(
 
     parts = []
     if exh_pqs:
-        parts.append(_bm25_batch_raw_exhaustive(spark, tables, exh_pqs, config))
+        qt, qsum = _batch_query_frames(spark, exh_pqs)
+        terms = sorted({t for pq in exh_pqs.values() for t, _ in pq.terms})
+        posting = matched_postings(spark, tables, terms)
+        avgdl = next(iter(exh_pqs.values())).avgdl
+        parts.append(_batch_score_blocks(posting, qt, qsum, config, avgdl))
     if wand_pqs:
         parts.append(
             _bm25_batch_raw_wand(spark, tables, wand_pqs, k, config, stats)
@@ -625,51 +576,26 @@ def _batch_query_frames(
     return qt, qsum
 
 
-def _bm25_batch_raw_exhaustive(
-    spark: SparkSession,
-    tables: IndexTables,
-    pqs: dict[int, PreparedQuery],
-    config: EngineConfig,
-) -> DataFrame:
-    """Shared-scan exhaustive batch scoring → (qid, docid, raw)."""
-    union_terms = sorted({t for pq in pqs.values() for t, _ in pq.terms})
-    posting = matched_postings(spark, tables, union_terms)
-    qt, qsum = _batch_query_frames(spark, pqs)
-    k1, b = config.bm25_k1, config.bm25_b
-    avgdl = next(iter(pqs.values())).avgdl
-    f = F.col("tf") * F.col("weight")
-    B = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    return (
-        posting.join(F.broadcast(qt), "term")
-        .withColumn("contrib", F.col("idf") * (f * F.lit(k1 + 1.0) / (f + B)))
-        .groupBy("qid", "docid")
-        .agg(F.sum("contrib").alias("contrib"))
-        .join(F.broadcast(qsum), "qid")
-        .select("qid", "docid", (F.col("contrib") + F.col("sum_idf")).alias("raw"))
-    )
-
-
 def _batch_score_blocks(
-    decoded: DataFrame,  # (block_id, term, docid, tf, dl)
+    decoded: DataFrame,  # ([block_id,] term, docid, tf, dl)
     qt: DataFrame,
     qsum: DataFrame,
-    pairs: DataFrame,  # (qid, block_id) — which blocks count for which qid
-    k1: float,
-    b: float,
+    config: EngineConfig,
     avgdl: float,
+    pairs: DataFrame | None = None,  # (qid, block_id): blocks each qid admits
 ) -> DataFrame:
-    """Score decoded postings per (qid, docid), restricted to each qid's
-    admitted (qid, block_id) pairs. The decode upstream is SHARED across
-    qids — a block decodes once however many queries admit it; the per-qid
-    fan-out happens JVM-side on the already-decoded rows."""
-    f = F.col("tf") * F.col("weight")
-    B = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+    """Score decoded postings per (qid, docid) → (qid, docid, raw); with
+    ``pairs``, restricted to each qid's admitted (qid, block_id) pairs. The
+    decode upstream is SHARED across qids — a block decodes once however
+    many queries use it; the per-qid fan-out happens JVM-side on the
+    already-decoded rows."""
+    scored = decoded.join(F.broadcast(qt), "term")
+    if pairs is not None:
+        scored = scored.join(F.broadcast(pairs), ["qid", "block_id"], "left_semi")
+    contrib = _bm25_contrib("tf", "dl", "weight", "idf", config, avgdl)
     return (
-        decoded.join(F.broadcast(qt), "term")
-        .join(F.broadcast(pairs), ["qid", "block_id"], "left_semi")
-        .withColumn("contrib", F.col("idf") * (f * F.lit(k1 + 1.0) / (f + B)))
-        .groupBy("qid", "docid")
-        .agg(F.sum("contrib").alias("contrib"))
+        scored.groupBy("qid", "docid")
+        .agg(F.expr(f"sum({contrib})").alias("contrib"))
         .join(F.broadcast(qsum), "qid")
         .select("qid", "docid", (F.col("contrib") + F.col("sum_idf")).alias("raw"))
     )
@@ -708,22 +634,13 @@ def _bm25_batch_raw_wand(
         tables.postings(spark).filter(F.col("term").isin(union_terms)).persist()
     )
     qt, qsum = _batch_query_frames(spark, pqs)
-    k1, b = config.bm25_k1, config.bm25_b
     avgdl = next(iter(pqs.values())).avgdl
     group_ub = None
     try:
         # --- 1. per-(qid, block) upper bounds (JVM-only column math) ------
-        f_max = F.col("max_tf") * F.col("weight")
-        b_min = F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * F.col("min_dl") / F.lit(avgdl)
-        )
-        ub_expr = F.greatest(
-            F.col("idf") * (f_max * F.lit(k1 + 1.0) / (f_max + b_min)),
-            F.lit(0.0),  # idf<0 ⇒ contribution < 0; 0 is a safe upper bound
-        )
         group_ub = (
             blocks.join(F.broadcast(qt), "term")
-            .withColumn("ub", ub_expr)
+            .withColumn("ub", F.expr(_bm25_block_ub("weight", "idf", config, avgdl)))
             .groupBy("qid", "block_id")
             .agg(F.sum("ub").alias("ub_sum"), F.max("df").alias("min_docs"))
             .join(F.broadcast(qsum), "qid")
@@ -762,17 +679,13 @@ def _bm25_batch_raw_wand(
                 taken += 1
                 if covered >= 4 * k and taken >= min_groups:
                     break
-        seed_pair_df = _local_df(
-            spark, seed_pairs, "qid int, block_id long"
-        )
+        seed_pair_df = _local_df(spark, seed_pairs, "qid int, block_id long")
         seed_ids = sorted({bid for _, bid in seed_pairs})
         dec_seed = decode_blocks(
             blocks.filter(F.col("block_id").isin(seed_ids)),
             keep=("block_id",),
         )
-        raw_seed = _batch_score_blocks(
-            dec_seed, qt, qsum, seed_pair_df, k1, b, avgdl
-        )
+        raw_seed = _batch_score_blocks(dec_seed, qt, qsum, config, avgdl, seed_pair_df)
         kth_rows = (
             raw_seed.withColumn(
                 "rn",
@@ -823,7 +736,7 @@ def _bm25_batch_raw_wand(
             ),
             keep=("block_id",),
         )
-        return _batch_score_blocks(dec, qt, qsum, surv, k1, b, avgdl)
+        return _batch_score_blocks(dec, qt, qsum, config, avgdl, surv)
     finally:
         blocks.unpersist()
         if group_ub is not None:
@@ -917,48 +830,24 @@ def bm25_topk_wand(
     pq = prepare_query(spark, tables, query, config)
     if not pq.terms:
         return _local_df(spark, [], TOPK_SCHEMA)
-    if pagerank_weight != 0.0:
+    if pagerank_weight != 0.0 or not _wand_routed(pq, k, config):
         if stats is not None:
-            stats["fallback"] = "exhaustive_pagerank_blend"
-        return _bm25_exhaustive(spark, tables, pq, config, k, pagerank_weight)
-    # routing (measured, BENCH/wand_crossover.json): pruning pays only when
-    # BOTH the decode volume clears the crossover AND the query is selective
-    # — its rare terms (df ≤ N/divisor) must cover ≥ k docs so θ can rise
-    # above common-only blocks' UB. Pure driver arithmetic on pq.dfs.
-    rare_df_max = max(1, pq.n_docs // max(config.wand_rare_df_divisor, 1))
-    rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
-    forced = config.wand_min_postings == 0  # tests/gate: always run real WAND
-    if not forced and (
-        sum(pq.dfs) < config.wand_min_postings or rare_cover < k
-    ):
-        # pruning overhead > decode cost, or θ cannot rise — exhaustive
-        if stats is not None:
-            stats["fallback"] = "exhaustive"
-        return _bm25_exhaustive(spark, tables, pq, config, k, 0.0)
-    k1, b = config.bm25_k1, config.bm25_b
-    sum_idf = sum(pq.idfs)
+            stats["fallback"] = (
+                "exhaustive_pagerank_blend" if pagerank_weight else "exhaustive"
+            )
+        raw = _bm25_raw_sql(spark, tables, pq, config)
+        return _finalize(spark, tables, raw, k, pagerank_weight)
     terms = [t for t, _ in pq.terms]
-
-    blocks = (
-        tables.postings(spark)
-        .filter(F.col("term").isin(terms))
-        .persist()
+    ub = _bm25_block_ub(
+        _term_lookup(pq, [w for _, w in pq.terms]), _term_lookup(pq, pq.idfs),
+        config, pq.avgdl,
     )
+    blocks = tables.postings(spark).filter(F.col("term").isin(terms)).persist()
     try:
-        weight, idf = _weight_idf_cols(pq)
-        f_max = F.col("max_tf") * weight
-        b_min = F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * F.col("min_dl") / F.lit(pq.avgdl)
-        )
-        ub_expr = F.greatest(
-            idf * (f_max * F.lit(k1 + 1.0) / (f_max + b_min)),
-            F.lit(0.0),  # idf<0 ⇒ contribution < 0; 0 is a safe upper bound
-        )
         group_ub = (
-            blocks.withColumn("ub", ub_expr)
-            .groupBy("block_id")
+            blocks.groupBy("block_id")
             .agg(
-                (F.sum("ub") + F.lit(sum_idf)).alias("group_ub"),
+                F.expr(f"sum({ub}) + {_dbl(sum(pq.idfs))}").alias("group_ub"),
                 F.max("df").alias("min_docs"),  # ≥ distinct docs via one term
             )
         ).persist()
@@ -1039,40 +928,7 @@ def vsm_topk(
     if not pq.terms:
         return _local_df(spark, [], TOPK_SCHEMA)
 
-    max_q_freq = max(w for _, w in pq.terms)
-    q_weights = [
-        (w / max_q_freq) * idf for (_, w), idf in zip(pq.terms, pq.idfs)
-    ]
-    q_norm = math.sqrt(sum(w * w for w in q_weights))
-
-    if k is not None and pagerank_weight == 0.0:
-        rows = _vsm_topk_sql(spark, tables, pq, k, q_weights, q_norm)
-        if rows is not None:
-            return _normalized_rows_df(spark, rows)
-
-    posting = matched_postings(spark, tables, [t for t, _ in pq.terms])
-    weight, idf = _weight_idf_cols(pq)
-    q_weight = _lit_map(
-        zip((t for t, _ in pq.terms), q_weights)
-    )[F.col("term")]
-    stats = tables.doc_stats(spark).select("docid", "max_tf", "vsm_weight")
-    # doc-side weight per (term, doc): (tf*weight/maxTF)·idf, dotted with q_weight
-    raw = (
-        posting.join(stats, "docid")
-        .withColumn(
-            "contrib",
-            q_weight
-            * ((F.col("tf") * weight / F.col("max_tf")) * idf),
-        )
-        .groupBy("docid")
-        .agg(
-            (
-                F.sum("contrib")
-                / (F.first("vsm_weight") * F.lit(q_norm))
-            ).alias("raw")
-        )
-    )
-    return _finalize(spark, tables, raw, k, pagerank_weight)
+    return _finalize(spark, tables, _vsm_raw_sql(spark, tables, pq), k, pagerank_weight)
 
 
 def vsm_topk_batch(
@@ -1102,13 +958,8 @@ def vsm_topk_batch(
 
     qt_rows, qn_rows = [], []
     for qid, pq in pqs.items():
-        max_q_freq = max(w for _, w in pq.terms)
-        q_weights = [
-            (w / max_q_freq) * idf for (_, w), idf in zip(pq.terms, pq.idfs)
-        ]
-        qn_rows.append(
-            (qid, float(math.sqrt(sum(w * w for w in q_weights))))
-        )
+        q_weights, q_norm = _vsm_query_weights(pq)
+        qn_rows.append((qid, float(q_norm)))
         qt_rows += [
             (qid, t, float(w), float(idf), float(qw))
             for ((t, w), idf, qw) in zip(pq.terms, pq.idfs, q_weights)
@@ -1121,18 +972,20 @@ def vsm_topk_batch(
     union_terms = sorted({t for pq in pqs.values() for t, _ in pq.terms})
     posting = matched_postings(spark, tables, union_terms)
     stats = tables.doc_stats(spark).select("docid", "max_tf", "vsm_weight")
+    contrib = _vsm_contrib("tf", "max_tf", "weight", "idf", "q_weight")
     raw = (
         posting.join(F.broadcast(qt), "term")
         .join(stats, "docid")
-        .withColumn(
-            "contrib",
-            F.col("q_weight")
-            * ((F.col("tf") * F.col("weight") / F.col("max_tf")) * F.col("idf")),
-        )
         .groupBy("qid", "docid")
-        .agg((F.sum("contrib") / F.first("vsm_weight")).alias("dot"))
+        .agg(
+            F.expr(f"sum({contrib})").alias("dot"),
+            F.first("vsm_weight").alias("vsm_weight"),
+        )
         .join(F.broadcast(qn), "qid")
-        .select("qid", "docid", (F.col("dot") / F.col("q_norm")).alias("raw"))
+        .select(
+            "qid", "docid",
+            F.expr(_vsm_cosine("dot", "vsm_weight", "q_norm")).alias("raw"),
+        )
     )
     return _finalize_batch(spark, tables, raw, k, pagerank_weight)
 

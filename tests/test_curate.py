@@ -280,6 +280,29 @@ def test_latest_snapshot_deterministic_tiebreak(spark):
     assert len(out) == 1 and out[0]["text"] == "zzz"
 
 
+def test_latest_snapshot_hashes_map_columns(spark):
+    # xxhash64 rejects MapType: a map column (e.g. HTTP headers) used to
+    # fail analysis; it must reach the full-row tie-break, and the survivor
+    # must not depend on input row order
+    crawl = spark.createDataFrame(
+        [
+            ("u1", 10, "same", {"a": "1", "b": "2"}),
+            ("u1", 10, "same", {"b": "2", "a": "1"}),
+            ("u1", 10, "same", {"a": "1", "b": "3"}),
+            ("u2", 5, "only", {}),
+        ],
+        "url string, warc_ts long, text string, headers map<string,string>",
+    )
+    out = curate.latest_snapshot(crawl).collect()
+    assert sorted(r["url"] for r in out) == ["u1", "u2"]
+    rev = curate.latest_snapshot(
+        crawl.orderBy(F.desc("warc_ts"), F.desc("url"))
+    ).collect()
+    assert {r["url"]: r["headers"] for r in rev} == {
+        r["url"]: r["headers"] for r in out
+    }
+
+
 def test_latest_snapshot_plan_is_window_group_limit(spark):
     crawl = spark.createDataFrame(
         [("u1", 1, "a"), ("u1", 2, "b")], "url string, warc_ts long, text string"

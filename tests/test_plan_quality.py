@@ -89,6 +89,22 @@ def test_postings_scan_prunes_to_term_filter(spark, tables):
     ), plan
 
 
+def test_sql_path_pushes_term_filter_for_any_term(spark, tables):
+    """The single-statement SQL paths inline query terms as hex literals;
+    they fold back to a pushed ``term IN (...)`` filter on the cached
+    postings scan even for terms SQL could not quote (a backslash, a
+    control character)."""
+    pq = q.prepare_query(spark, tables, "web c:\\windows blob\x01tok", CFG)
+    for df in (q._bm25_raw_sql(spark, tables, pq, CFG), q._vsm_raw_sql(spark, tables, pq)):
+        plan = _plan(df)
+        assert any(
+            "InMemoryTableScan" in line
+            and " IN (" in line
+            and all(t in line for t, _ in pq.terms)
+            for line in plan.splitlines()
+        ), plan
+
+
 def test_deterministic_split_is_map_only_and_pruned(spark, tmp_path):
     """deterministic_split: zero exchanges (sampling 100 TB is a map-only
     job) and the (doc_id, split) projection prunes the parquet scan to the

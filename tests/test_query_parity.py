@@ -9,6 +9,7 @@ PageRank-blended configuration.
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from search_engine_trec_fair_ranking_19_spark.config import EngineConfig
 from search_engine_trec_fair_ranking_19_spark.operators import query as q
@@ -399,38 +400,71 @@ def test_bm25_batch_wand_actually_prunes(spark, tmp_path):
             assert gs == pytest.approx(es, abs=1e-9), f"qid {qid} doc {gd}"
 
 
-def test_sql_fast_path_matches_column_path(spark, tables, monkeypatch):
-    """The single-statement SQL fast paths (bm25 + vsm, bounded k, no blend)
-    must return BIT-identical (docid, score) lists to the Column-API plans
-    they replace — same literals via repr, same associativity, so not just
-    approx-equal: exactly equal."""
-    def run_both(fn, sql_name, query, k=25):
-        fast = [(r["docid"], r["score"]) for r in fn(spark, tables, query, k=k).collect()]
-        with monkeypatch.context() as m:
-            m.setattr(q, sql_name, lambda *a, **kw: None)  # force fallback
-            slow = [(r["docid"], r["score"]) for r in fn(spark, tables, query, k=k).collect()]
-        assert fast == slow, f"{fn.__name__} diverged on {query!r}"
-        return len(fast)
+def test_single_query_matches_batch_bit_identical(spark, tables):
+    """Every plan renders the one scoring formula per model
+    (``_bm25_contrib`` / ``_vsm_contrib``), so the single-query SQL plans
+    and the batch plans return BIT-identical (docid, score) lists — exact
+    equality, not approx."""
+    def by_qid(df):
+        out = {}
+        for r in df.orderBy("qid", F.desc("score"), "docid").collect():
+            out.setdefault(r["qid"], []).append((r["docid"], r["score"]))
+        return out
 
+    def single(fn, query):
+        return [(r["docid"], r["score"]) for r in fn(spark, tables, query, k=25).collect()]
+
+    bm25 = by_qid(q.bm25_topk_batch(
+        spark, tables, list(enumerate(QUERIES)), k=25,
+        config=CFG.with_(wand_min_postings=EngineConfig().wand_min_postings),
+    ))
+    vsm = by_qid(q.vsm_topk_batch(spark, tables, list(enumerate(QUERIES[:6])), k=25))
     matched = 0
-    for query in QUERIES:
-        matched += run_both(q.bm25_topk, "_bm25_topk_sql", query)
-        matched += run_both(q.vsm_topk, "_vsm_topk_sql", query)
+    for qid, query in enumerate(QUERIES):
+        got = single(q.bm25_topk, query)
+        assert got == bm25.get(qid, []), f"bm25 diverged on {query!r}"
+        matched += len(got)
+    for qid, query in enumerate(QUERIES[:6]):
+        assert single(q.vsm_topk, query) == vsm.get(qid, []), (
+            f"vsm diverged on {query!r}"
+        )
     assert matched > 0  # the set must exercise non-empty results
 
 
-def test_sql_fast_path_used_for_bounded_k(spark, tables, monkeypatch):
-    """Routing contract: bounded k + no blend takes the SQL path; k=None and
-    blended queries fall back to the Column plan (normalization/blend live
-    there)."""
-    calls = []
-    real = q._bm25_topk_sql
-    with monkeypatch.context() as m:
-        m.setattr(q, "_bm25_topk_sql", lambda *a, **kw: calls.append(1) or real(*a, **kw))
-        q.bm25_topk(spark, tables, "web search", k=5).collect()
-        assert calls  # used
-        calls.clear()
-        q.bm25_topk(spark, tables, "web search", k=None).collect()
-        assert not calls  # k=None never routes through the SQL path
-        q.bm25_topk(spark, tables, "web search", k=5, pagerank_weight=0.25).collect()
-        assert not calls  # blend never routes through the SQL path
+def test_single_query_job_count(spark, tables):
+    """Job-count contract of the one single-query plan: a bounded bm25_topk
+    (SQL scoring statement + _finalize's top-k collect) runs at most 2 Spark
+    jobs; vsm_topk adds one, the broadcast of its doc_stats join."""
+    jst = spark.sparkContext._jsc.sc().statusTracker()
+    for fn, max_jobs in ((q.bm25_topk, 2), (q.vsm_topk, 3)):
+        fn(spark, tables, "web search engine", k=10)  # warm views and UDF
+        n0 = len(jst.getJobIdsForGroup(None))
+        fn(spark, tables, "web search engine", k=10).collect()
+        assert len(jst.getJobIdsForGroup(None)) - n0 <= max_jobs, fn.__name__
+
+
+@pytest.fixture(scope="module")
+def ctl_index(spark, tmp_path_factory):
+    """A corpus whose token ``blob\x01tok`` carries a control character:
+    TEXT_DELIMITERS does not split on it, so it is an indexed term."""
+    cfg = EngineConfig(postings_block_size=8, wand_min_postings=0)
+    docs = [
+        (
+            f"u{i:03d}",
+            " ".join(["blob\x01tok"] * (i % 4) + ["web"] * (i % 3) + [f"pad{i}"]),
+        )
+        for i in range(40)
+    ]
+    webtext = spark.createDataFrame(docs, "url string, text string")
+    t = build_index(spark, webtext, str(tmp_path_factory.mktemp("ctlidx")), cfg)
+    return t, oracle.build_index(docs, cfg)
+
+
+@pytest.mark.parametrize("query", ["blob\x01tok web", "web c:\\windows", "blob\x01tok"])
+def test_terms_sql_cannot_quote_match_oracle(spark, ctl_index, query):
+    """Query terms with a control character or a backslash (QUERY_DELIMITERS
+    splits on neither) inline into the single SQL statement as hex literals
+    and still score exactly like the oracle."""
+    t, oidx = ctl_index
+    _assert_matches(q.bm25_topk(spark, t, query, k=10), oracle.bm25_topk(oidx, query, k=10))
+    _assert_matches(q.vsm_topk(spark, t, query, k=10), oracle.vsm_topk(oidx, query, k=10))
